@@ -58,17 +58,8 @@ object Bench {
     val selected = SparkEntry.queries.filter {
       case (name, _) => only.forall(_.contains(name))
     }
-    // Queries whose wall-clock is dominated by a deterministic HARNESS
-    // (sequential micro-batch loops, multi-run DAG drives, failure+resume
-    // scenarios) rather than the data path — their cost is bounded by the
-    // harness shape (batch counts, day caps), is largely SF-invariant,
-    // and would otherwise mask real per-query data-path regressions in
-    // the total. Split out so both signals stay readable.
-    val harness = Set("q68_tiki_pipeline", "q101_agg_maintenance",
-      "q103_analytics_dag", "q104_trends_dag", "q105_fx_rate_dag",
-      "q106_upsert_sink", "q108_streaming_dedup", "q110_sessionize_tws",
-      "q111_streaming_funnel", "q112_backfill", "q113_streaming_hll",
-      "q114_streaming_cms", "q131_span_incremental", "q169_dsv2_stream")
+    // harness-drive gates are totalled apart from the data path (see Gate)
+    val harness = SparkEntry.gates.filter(_.harness).map(_.name).toSet
     // Per-query 1-min loadavg, sampled right after each query finishes:
     // BENCH_r16 was taken at loadavg ~11/32 and read 74% slower than the
     // clean window — without a per-query load trace that misreads as a

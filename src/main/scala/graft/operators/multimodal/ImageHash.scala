@@ -162,7 +162,7 @@ object ImageHash {
         .select(col(idCol).as("hid"), col("dhash"), col("ahash")))
     // VERIFY AT THE JOIN, then dedup narrow rows. Order matters at
     // scale and both ways of getting it wrong were measured on the 100×
-    // corpus (ProbeQ167, 500k images): the hashes must ride the band
+    // corpus (500k images): the hashes must ride the band
     // join so the popcount cut executes against the join output —
     // correlated corpora produce ~25× more band candidates than true
     // pairs (314M vs 12.5M there), and deduplicating ids BEFORE the cut

@@ -899,11 +899,8 @@ object CurationQueries {
 
   final case class DocEvent(doc_id: Long, text: String)
 
-  private val q161Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def q161NbStream(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q161Invocation.incrementAndGet()
-    val target = s"${PipelineQueries.scratch}/q161_$inv/nb"
+    val target = s"${PipelineQueries.freshDir("q161")}/nb"
     val docs = Tables.documents(spark, dir)
     val model = graft.operators.NbClassifier.fit(docs, "doc_id", "text",
       col("lang") === "en", col("lang").isNotNull && col("lang") =!= "en")

@@ -727,8 +727,6 @@ object DedupQueries {
       |JOIN rawlen r ON r.doc_id = f.doc_id
       |GROUP BY f.doc_id, r.n_lines""".stripMargin
 
-  private val q131Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** q131's day split: TWO days by `doc_id % 2`. Two is the minimum that
     * exercises the whole state machine (day 1 pays every path: crossing
     * detection against real prior state, postings-pruned re-clean of day-0
@@ -759,7 +757,7 @@ object DedupQueries {
     */
   def q131SpanIncremental(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.dedup.IncrementalSpanDedup
-    val root = s"${PipelineQueries.scratch}/q131_${q131Invocation.incrementAndGet()}"
+    val root = PipelineQueries.freshDir("q131")
     val docs = Tables.documents(spark, dir)
     for (day <- 0 until SpanDays)
       IncrementalSpanDedup.append(spark, root,

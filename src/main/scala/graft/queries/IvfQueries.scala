@@ -118,8 +118,6 @@ object IvfQueries {
     */
   final case class VecEvent(vec_id: Long, embedding: Seq[Float])
 
-  private val q152Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** How the q152 stream batches the corpus: 3 deterministic micro-batches
     * by vec_id % 3 — every vector arrives exactly once, in a batching the
     * oracle never sees (the monoid contract: final index ≡ one-pass batch
@@ -146,8 +144,7 @@ object IvfQueries {
     import spark.implicits._
     import graft.operators.similarity.IvfIncremental
     import graft.streaming.IvfStreamSink
-    val inv = q152Invocation.incrementAndGet()
-    val target = s"${PipelineQueries.scratch}/q152_$inv/ivf"
+    val target = s"${PipelineQueries.freshDir("q152")}/ivf"
     val emb = Tables.embeddings(spark, dir)
     // frozen artifacts from the base stratum; .assigned is never consumed
     // (lazy) — the stream is the only writer of assignment state here

@@ -234,12 +234,10 @@ object MartQueries {
     * (VERDICT r3 nit 3). The per-pid parent dir's shutdown hook reclaims
     * every invocation's files.
     */
-  private val q42Invocation = new java.util.concurrent.atomic.AtomicLong()
-
   def q42BucketedRevenue(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Bucketed
     val base = bucketedScratch
-    val inv = q42Invocation.incrementAndGet()
+    val inv = PipelineQueries.invocation("q42")
     Bucketed.write(Tables.orders(spark, dir)
         .select(col("o_custkey"), col("o_totalprice")),
       s"graft_q42_orders_$inv", s"$base/q42_orders_$inv", "o_custkey", buckets = 8)

@@ -24,8 +24,6 @@ import graft.sources.CleanZone
   */
 object PipelineQueries {
 
-  private val q68Invocation = new AtomicInteger(0)
-
   /** Per-process scratch root; removed on JVM exit so repeated bench/verify
     * runs don't strand warehouse copies in /tmp (same lifecycle as
     * MartQueries' bucketed scratch).
@@ -41,6 +39,21 @@ object PipelineQueries {
     }))
     base
   }
+
+  private val invocations =
+    new java.util.concurrent.ConcurrentHashMap[String, AtomicInteger]()
+
+  /** The next invocation number (1, 2, ...) of gate `key` in this process. */
+  private[queries] def invocation(key: String): Int =
+    invocations.computeIfAbsent(key, _ => new AtomicInteger(0))
+      .incrementAndGet()
+
+  /** `$scratch/<key>_<n>`, fresh per invocation: gates that write tables
+    * run repeatedly in one JVM (best-of-N bench passes) and must never
+    * see an earlier run's files.
+    */
+  private[queries] def freshDir(key: String): String =
+    s"$scratch/${key}_${invocation(key)}"
 
   private val Date = "2024-03-15"
 
@@ -161,8 +174,7 @@ object PipelineQueries {
     * WRITE_TRUNCATE → :273 dim MERGE → analytics_dag.py:172 ASSERT gate).
     */
   def q68TikiPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q68Invocation.incrementAndGet()
-    val base = s"$scratch/q68_$inv"
+    val base = freshDir("q68")
     writeQ68Raw(spark, dir, base)
 
     TikiDailyPipeline.run(spark, s"$base/raw", s"$base/wh", Date)
@@ -194,8 +206,6 @@ object PipelineQueries {
       |FROM part
       |WHERE p_partkey % 97 <> 0""".stripMargin
 
-  private val q98Invocation = new AtomicInteger(0)
-
   /** q98: PARTITION-PRUNED MERGE ([[graft.operators.Upsert.mergePruned]],
     * ref load_to_bq.py:143 + :273) — orders land partitioned by year; a
     * delta touching ONLY the latest year (10% price updates at +1.00,
@@ -207,8 +217,7 @@ object PipelineQueries {
     */
   def q98MergePruned(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val inv = q98Invocation.incrementAndGet()
-    val base = s"$scratch/q98_$inv/orders_by_year"
+    val base = s"${freshDir("q98")}/orders_by_year"
 
     val o = Tables.orders(spark, dir)
     val target = o.select(col("o_orderkey"),
@@ -279,8 +288,6 @@ object PipelineQueries {
       |  CAST(SUM(total_price) AS DOUBLE) AS total
       |FROM final GROUP BY 1, 2""".stripMargin
 
-  private val q99Invocation = new AtomicInteger(0)
-
   /** q99: the DataSource V2 raw-JSON connector
     * ([[graft.sources.dsv2.RawJsonSource]]) driven through the oracle
     * gate — crawler-shaped JSONL (including corrupt lines every ~101st
@@ -292,8 +299,7 @@ object PipelineQueries {
     * line skipping + filter pushdown lose and invent nothing.
     */
   def q99Dsv2Read(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q99Invocation.incrementAndGet()
-    val base = s"$scratch/q99_$inv/raw"
+    val base = s"${freshDir("q99")}/raw"
     val pk = col("p_partkey")
     def s(c: Column): Column = c.cast("string")
     val line = when(pk % 101 === 0, lit("{broken"))
@@ -330,8 +336,6 @@ object PipelineQueries {
       |  AND p_partkey % 3 = 0
       |GROUP BY 1""".stripMargin
 
-  private val q154Invocation = new AtomicInteger(0)
-
   /** q154: DSv2 AGGREGATE pushdown
     * ([[graft.sources.dsv2.RawJsonSource]] via
     * `SupportsPushDownAggregates` — the connector tier above q99's
@@ -349,8 +353,7 @@ object PipelineQueries {
     * with identical results.
     */
   def q154Dsv2Agg(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q154Invocation.incrementAndGet()
-    val base = s"$scratch/q154_$inv/raw"
+    val base = s"${freshDir("q154")}/raw"
     val pk = col("p_partkey")
     def s(c: Column): Column = c.cast("string")
     val line = when(pk % 101 === 0, lit("{broken"))
@@ -389,8 +392,6 @@ object PipelineQueries {
       |WHERE p_partkey % 101 <> 0
       |GROUP BY 1""".stripMargin
 
-  private val q101Invocation = new AtomicInteger(0)
-
   /** q101: the continuous incremental-agg SINK driven end-to-end through
     * the oracle gate (SURVEY 44e — the streaming family's last all-spec
     * surface): events split into 5 deterministic micro-batches
@@ -407,8 +408,7 @@ object PipelineQueries {
     */
   def q101AggMaintenance(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val inv = q101Invocation.incrementAndGet()
-    val target = s"$scratch/q101_$inv/mart"
+    val target = s"${freshDir("q101")}/mart"
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("value"))
     def aggOf(df: DataFrame): DataFrame =
@@ -428,8 +428,6 @@ object PipelineQueries {
     """SELECT user_id, COUNT(*) AS n_events,
       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
       |FROM events GROUP BY 1""".stripMargin
-
-  private val q103Invocation = new AtomicInteger(0)
 
   /** q103: analytics_dag end-to-end — the reference's CENTERPIECE DAG
     * (dags/analytics_dag.py:97-240: 5-way Golden Join over the warehouse
@@ -453,8 +451,7 @@ object PipelineQueries {
     * the exact integer half-up USD division — from `part` alone.
     */
   def q103AnalyticsDag(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q103Invocation.incrementAndGet()
-    val base = s"$scratch/q103_$inv"
+    val base = freshDir("q103")
     val wh = s"$base/wh"
 
     val pk = col("p_partkey")
@@ -544,8 +541,6 @@ object PipelineQueries {
       |       ELSE 'Full Data' END AS trend_signal_status
       |FROM arms""".stripMargin
 
-  private val q104Invocation = new AtomicInteger(0)
-
   /** q104: trends_dag end-to-end (ref dags/trends_dag.py:595-687: pytrends
     * wide CSV → melt → "<1"/null cleaning → dedup-aggregate → staging
     * MERGE on (date, keyword)) driven through
@@ -560,8 +555,7 @@ object PipelineQueries {
     * score formula, picking the winning run per day.
     */
   def q104TrendsDag(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q104Invocation.incrementAndGet()
-    val base = s"$scratch/q104_$inv"
+    val base = freshDir("q104")
     new java.io.File(base).mkdirs()
     val table = s"$base/fact_google_trends"
 
@@ -606,8 +600,6 @@ object PipelineQueries {
       |  (d = 14) AS is_partial
       |FROM range(1, 15) t(d), range(0, 12) u(k)""".stripMargin
 
-  private val q105Invocation = new AtomicInteger(0)
-
   /** q105: fx_rate_dag end-to-end (ref dags/fx_rate_dag.py:74-129: one
     * validated daily rate row — fetched or fallback — MERGEd into
     * dim_exchange_rate) driven through [[graft.pipelines.FxPipeline.run]]
@@ -617,8 +609,7 @@ object PipelineQueries {
     * gated result is the accumulated dim read back from disk.
     */
   def q105FxRateDag(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q105Invocation.incrementAndGet()
-    val table = s"$scratch/q105_$inv/dim_exchange_rate"
+    val table = s"${freshDir("q105")}/dim_exchange_rate"
     (1 to 14).foreach { d =>
       val rate = if (d % 4 == 0) None else Some(25000.0 + d * 10 + 0.5)
       graft.pipelines.FxPipeline.run(spark, rate, f"2024-03-$d%02d", table)
@@ -640,8 +631,6 @@ object PipelineQueries {
       |       ELSE 'open.er-api.com' END AS source
       |FROM range(1, 15) t(d)""".stripMargin
 
-  private val q106Invocation = new AtomicInteger(0)
-
   /** q106: the streaming UPSERT sink (SURVEY 44) driven end-to-end through
     * the oracle gate, the q101 protocol applied to keep-latest state:
     * events split into 5 deterministic micro-batches (event_id % 5), each
@@ -656,8 +645,7 @@ object PipelineQueries {
     * never seen the batching or the merges.
     */
   def q106UpsertSink(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q106Invocation.incrementAndGet()
-    val target = s"$scratch/q106_$inv/state"
+    val target = s"${freshDir("q106")}/state"
     // null user_ids are excluded as a defined contract: a full-outer MERGE
     // never matches NULL=NULL, so each batch's null-key winner would INSERT
     // a fresh row while the oracle's window groups all NULLs into one —
@@ -691,8 +679,6 @@ object PipelineQueries {
       |      FROM events WHERE ts IS NOT NULL AND user_id IS NOT NULL) t
       |WHERE rn = 1""".stripMargin
 
-  private val q112Invocation = new AtomicInteger(0)
-
   /** q112: the BACKFILL DRIVER ([[graft.pipelines.Backfill]], SURVEY 63 —
     * the reference's Airflow catchup / retry / depends_on_past contract,
     * tiki_dag.py:18-33) driven through a failure-and-resume scenario and
@@ -715,8 +701,7 @@ object PipelineQueries {
     * harness cost — r15 task #7 — every scenario arm is still driven.)
     */
   def q112Backfill(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q112Invocation.incrementAndGet()
-    val base = s"$scratch/q112_$inv"
+    val base = freshDir("q112")
     val wh = s"$base/wh"
     new java.io.File(base).mkdirs()
 
@@ -825,8 +810,6 @@ object PipelineQueries {
       |       ELSE 'Full Data' END AS trend_signal_status
       |FROM arms""".stripMargin
 
-  private val q164Invocation = new AtomicInteger(0)
-
   /** q164: DSv2 WRITE round-trip — the connector's write tier
     * (`SupportsWrite` with a two-phase staged-commit protocol: tasks
     * stream to hidden attempt-unique staging files, task commit messages
@@ -840,8 +823,7 @@ object PipelineQueries {
     */
   def q164Dsv2Roundtrip(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    val inv = q164Invocation.incrementAndGet()
-    val base = s"$scratch/q164_$inv/docs"
+    val base = s"${freshDir("q164")}/docs"
     // integral widths drift across corpus generators (the 100× probe
     // corpus carries n_chars as INT) — normalize to the connector's
     // long grain, the Tables.events layout-normalization discipline
@@ -860,8 +842,6 @@ object PipelineQueries {
 
   def q164Oracle: String =
     "SELECT doc_id, text, lang, source, n_chars FROM documents"
-
-  private val q169Invocation = new AtomicInteger(0)
 
   /** q169: DSv2 STREAMING read
     * ([[graft.sources.dsv2.RawJsonSource]] via `MICRO_BATCH_READ` — the
@@ -888,10 +868,10 @@ object PipelineQueries {
     * retry).
     */
   def q169Dsv2Stream(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q169Invocation.incrementAndGet()
-    val base = s"$scratch/q169_$inv/raw"
-    val out = s"$scratch/q169_$inv/rows"
-    val ckpt = s"$scratch/q169_$inv/ckpt"
+    val root = freshDir("q169")
+    val base = s"$root/raw"
+    val out = s"$root/rows"
+    val ckpt = s"$root/ckpt"
     val pk = col("p_partkey")
     def s(c: Column): Column = c.cast("string")
     val line = when(pk % 101 === 0, lit("{broken"))

@@ -4,7 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.multimodal.{AudioHash, AudioHashIndex, BinaryPipeline, ImageHash, VideoHash}
+import graft.operators.{OpCache, Par}
+import graft.operators.dedup.{DupClusters, IncrementalClusters}
+import graft.operators.multimodal.{AudioHash, AudioHashIndex, BinaryPipeline,
+  ImageHash, ImageHashIndex, VideoHash, VideoHashIndex}
 import graft.operators.similarity.{CosineTopK, LshAnn}
 
 /** Similarity-search and multimodal queries (SURVEY §2 items 34-36, 41). */
@@ -336,47 +339,6 @@ object SimilarityQueries {
        |FROM ih a JOIN ih b ON b.doc_id > a.doc_id
        |WHERE bit_count(xor(a.dhash, b.dhash)) <= ${ImageHash.DefaultMaxHamming}""".stripMargin
 
-  /** q171: image duplicate CLUSTERS — the multimodal×CC composition
-    * closing the image-dedup story (q166 hashes → q167 banded pairs →
-    * the q52 transitive-closure substrate, now pre-contracted): a
-    * re-encoded BMP/PNG twin, its patched near-dup, and every
-    * exact-pixel copy land in ONE cluster with the min doc_id as the
-    * deterministic survivor — exactly what a LAION-class pipeline keeps
-    * per image. The oracle replays hashes, the full Hamming ball, and
-    * the closure as a recursive CTE (the q52 discipline).
-    */
-  def q171ImageDedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    // cached: components() consumes its pair input three times (node
-    // universe both ways + the pre-contraction pass) and the pair
-    // lineage here is the whole decode→hash→band join
-    val pairs = graft.operators.OpCache.cache(ImageHash.nearDupPairs(
-      ImageHash.hashes(spark, imageCorpus(spark, dir), "doc_id", "blob"),
-      "doc_id"))
-    graft.operators.dedup.DupClusters.components(pairs, "a_id", "b_id")
-      .select(col("node").as("doc_id"), col("cluster_rep"),
-        col("cluster_size"))
-  }
-
-  def q171Oracle: String =
-    s"""WITH RECURSIVE $imageHashCtes, ipairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM ih a JOIN ih b ON b.doc_id > a.doc_id
-       |  WHERE bit_count(xor(a.dhash, b.dhash)) <= ${ImageHash.DefaultMaxHamming}
-       |), edges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM ipairs
-       |  UNION SELECT b_id, a_id FROM ipairs
-       |), reach AS (
-       |  SELECT src AS node, dst AS r FROM edges
-       |  UNION
-       |  SELECT rc.node, e.dst FROM reach rc JOIN edges e ON rc.r = e.src
-       |), comp AS (
-       |  SELECT node AS doc_id, MIN(r) AS cluster_rep FROM reach GROUP BY node
-       |)
-       |SELECT c.doc_id, c.cluster_rep, cnt.cluster_size
-       |FROM comp c
-       |JOIN (SELECT cluster_rep, COUNT(*) AS cluster_size
-       |      FROM comp GROUP BY 1) cnt USING (cluster_rep)""".stripMargin
-
   /** Shared derivation for the audio-dedup gates (q173/q174): documents
     * become REAL WAV recordings with planted duplicate structure, all of
     * it replayable —
@@ -589,111 +551,15 @@ object SimilarityQueries {
     s"""WITH $videoPairCtes
        |SELECT a_id, b_id, n_shared FROM vpairs""".stripMargin
 
-  private val q178Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** q178: INCREMENTAL image-hash index
-    * ([[graft.operators.multimodal.ImageHashIndex]] — the daily-append
-    * discipline for the 41c retrieval): the q166/q167 image corpus
-    * arrives as THREE interleaved crawl days (doc_id % 3 — every
-    * duplicate group and its PNG-transcoded/patched members are split
-    * ACROSS days, so cross-batch pairing is exercised, not just
-    * within-batch), each appended to a fresh on-disk index; the union
-    * of the per-append new-pair outputs must equal the ONE-SHOT batch
-    * pairing — so the oracle IS q167's full-Hamming-ball replay. A
-    * double-counted pair (re-pairing a stored bucket), a missed
-    * cross-day pair (delta not probed against the store), or an
-    * arrival-order leak (pairs ordered by arrival instead of id)
-    * diverges rows or hashes.
-    */
-  def q178ImageIndexAppend(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q178Invocation.incrementAndGet()
-    val idxDir = s"${PipelineQueries.scratch}/q178_$inv/index"
-    val corpus = graft.operators.OpCache.cache(imageCorpus(spark, dir))
-    (0 until 3).map { day =>
-      graft.operators.multimodal.ImageHashIndex.append(spark, idxDir,
-        corpus.filter(col("doc_id") % 3 === day), "doc_id", "blob")
-    }.reduce(_ unionByName _)
-  }
-
-  /** The appended union must equal the batch pairing — q167's oracle. */
-  def q178Oracle: String = q167Oracle
-
-  /** q179: audio duplicate CLUSTERS — q171's multimodal×CC composition
-    * for sound (q173 hashes → q174 banded pairs → the pre-contracted
-    * q52 closure, min-doc-id survivors): a re-headered copy, its
-    * volume-scaled twin, and every exact re-encode land in ONE cluster
-    * with a deterministic keeper — the per-recording keep table a
-    * production audio corpus ships. Oracle: the full hash replay, the
-    * quadratic Hamming ball, and the closure as a recursive CTE.
-    */
-  def q179AudioDedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    // cached: components() consumes its pair input three times and the
-    // pair lineage is the whole decode→profile→hash→band join
-    val pairs = graft.operators.OpCache.cache(AudioHash.nearDupPairs(
-      AudioHash.hashes(spark, audioCorpus(spark, dir), "doc_id", "blob"),
-      "doc_id"))
-    graft.operators.dedup.DupClusters.components(pairs, "a_id", "b_id")
-      .select(col("node").as("doc_id"), col("cluster_rep"),
-        col("cluster_size"))
-  }
-
-  def q179Oracle: String =
-    s"""WITH RECURSIVE $audioHashCtes, apairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM ah a JOIN ah b ON b.doc_id > a.doc_id
-       |  WHERE bit_count(xor(a.ehash, b.ehash)) <= ${AudioHash.DefaultMaxHamming}
-       |), aedges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM apairs
-       |  UNION SELECT b_id, a_id FROM apairs
-       |), areach AS (
-       |  SELECT src AS node, dst AS r FROM aedges
-       |  UNION
-       |  SELECT rc.node, e.dst FROM areach rc JOIN aedges e ON rc.r = e.src
-       |), acomp AS (
-       |  SELECT node AS doc_id, MIN(r) AS cluster_rep FROM areach GROUP BY node
-       |)
-       |SELECT c.doc_id, c.cluster_rep, cnt.cluster_size
-       |FROM acomp c
-       |JOIN (SELECT cluster_rep, COUNT(*) AS cluster_size
-       |      FROM acomp GROUP BY 1) cnt USING (cluster_rep)""".stripMargin
-
-  /** q180: video duplicate CLUSTERS — the same composition at the
-    * video grain (q175 share-count pairs → CC): identical-footage
-    * copies chain into one cluster with the min-id keeper, while the
-    * 2-frame-overlap decoys stay OUTSIDE the unshifted cluster but
-    * chain to each other. Oracle: per-frame hash replay, the DF-capped
-    * share-count pair rule, the recursive closure.
-    */
-  def q180VideoDedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.operators.OpCache.cache(VideoHash.nearDupPairs(
-      VideoHash.frameHashes(spark, videoCorpus(spark, dir), "doc_id",
-        "blob", frames = 8),
-      "doc_id"))
-    graft.operators.dedup.DupClusters.components(pairs, "a_id", "b_id")
-      .select(col("node").as("doc_id"), col("cluster_rep"),
-        col("cluster_size"))
-  }
-
-  def q180Oracle: String = {
-    s"""WITH RECURSIVE $videoPairCtes, vedges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM vpairs
-       |  UNION SELECT b_id, a_id FROM vpairs
-       |), vreach AS (
-       |  SELECT src AS node, dst AS r FROM vedges
-       |  UNION
-       |  SELECT rc.node, e.dst FROM vreach rc JOIN vedges e ON rc.r = e.src
-       |), vcomp AS (
-       |  SELECT node AS doc_id, MIN(r) AS cluster_rep FROM vreach GROUP BY node
-       |)
-       |SELECT c.doc_id, c.cluster_rep, cnt.cluster_size
-       |FROM vcomp c
-       |JOIN (SELECT cluster_rep, COUNT(*) AS cluster_size
-       |      FROM vcomp GROUP BY 1) cnt USING (cluster_rep)""".stripMargin
-  }
-
   final case class ImgEvent(doc_id: Long, blob: Array[Byte])
 
-  private val q181Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** One crawl day of a media corpus: doc_id % 3 splits every duplicate
+    * group (and its transcoded, patched, re-headered or shifted members)
+    * ACROSS days, so cross-batch pairing is exercised, not just
+    * within-batch.
+    */
+  private def crawlDay(corpus: DataFrame, day: Int): DataFrame =
+    corpus.filter(col("doc_id") % 3 === day)
 
   /** q181: STREAMING image-index maintenance
     * ([[graft.streaming.ImageIndexStreamSink]] — the q152 sink
@@ -709,10 +575,9 @@ object SimilarityQueries {
     * rows.
     */
   def q181ImageIndexStream(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q181Invocation.incrementAndGet()
-    val idxDir = s"${PipelineQueries.scratch}/q181_$inv/index"
+    val idxDir = s"${PipelineQueries.freshDir("q181")}/index"
     import spark.implicits._
-    val corpus = graft.operators.OpCache.cache(imageCorpus(spark, dir))
+    val corpus = OpCache.cache(imageCorpus(spark, dir))
     val sink = graft.streaming.ImageIndexStreamSink.appendBatch(
       idxDir, "doc_id", "blob") _
     val batches = FeedHarness.batchesOf(
@@ -720,17 +585,9 @@ object SimilarityQueries {
         col("blob")), "b")(r => ImgEvent(r.getLong(1), r.getAs[Array[Byte]](2)))
     FeedHarness.driveForeach(spark, batches)(sink)
     // retry of the LAST applied batch id — must no-op on the marker
-    sink(corpus.filter(col("doc_id") % 3 === 2)
-      .select(col("doc_id"), col("blob")), 2L)
+    sink(crawlDay(corpus, 2).select(col("doc_id"), col("blob")), 2L)
     graft.streaming.ImageIndexStreamSink.readPairs(spark, idxDir)
   }
-
-  /** The streamed ledger union must equal the batch pairing — q167's
-    * oracle (the q178 contract through a real stream).
-    */
-  def q181Oracle: String = q167Oracle
-
-  private val q182Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** q182: image-index COMPACTION invariance — the 41i/41l maintenance
     * step gated end-to-end: two daily appends land, the postings table
@@ -743,363 +600,266 @@ object SimilarityQueries {
     * dirs → one), so the gate cannot silently pass by never compacting.
     */
   def q182ImageIndexCompact(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.multimodal.ImageHashIndex
-    val inv = q182Invocation.incrementAndGet()
-    val idxDir = s"${PipelineQueries.scratch}/q182_$inv/index"
-    val corpus = graft.operators.OpCache.cache(imageCorpus(spark, dir))
+    val idxDir = s"${PipelineQueries.freshDir("q182")}/index"
+    val corpus = OpCache.cache(imageCorpus(spark, dir))
     // materialized (the checkpoint is eager): compaction now folds the
     // PAIRS ledger too, so a lazy frame over a pre-compaction batch dir
     // would dangle — the documented maintenance-window contract
     // (OpCache.checkpoint also releases the blocks with the query scope)
     val early = (0 until 2).map { day =>
-      graft.operators.OpCache.checkpoint(ImageHashIndex.append(spark, idxDir,
-        corpus.filter(col("doc_id") % 3 === day), "doc_id", "blob"))
+      OpCache.checkpoint(ImageHashIndex.append(spark, idxDir,
+        crawlDay(corpus, day), "doc_id", "blob"))
     }
     val folded = ImageHashIndex.compact(spark, idxDir)
     require(folded == 2, s"compaction must fold both batch dirs, got $folded")
     require(ImageHashIndex.compact(spark, idxDir) == 0,
       "re-running compaction on a compact index must be a no-op")
     val late = ImageHashIndex.append(spark, idxDir,
-      corpus.filter(col("doc_id") % 3 === 2), "doc_id", "blob")
+      crawlDay(corpus, 2), "doc_id", "blob")
     (early :+ late).reduce(_ unionByName _)
   }
 
-  /** Compaction must not move values — q167's oracle again. */
-  def q182Oracle: String = q167Oracle
-
-  private val q185Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** q185: INCREMENTAL audio-hash index
-    * ([[graft.operators.multimodal.AudioHashIndex]] — the generic
-    * [[graft.operators.multimodal.BandedHashIndex]] protocol q178
-    * proved for images, instantiated for the 41g energy hash; before
-    * this round the audio modality had NO incremental index and every
-    * append would have re-paired history): the q173/q174 audio corpus
-    * arrives as THREE interleaved crawl days (doc_id % 3 — re-headered
-    * and volume-scaled twins split ACROSS days, so cross-batch pairing
-    * is exercised), each appended to a fresh on-disk banded index; the
-    * union of the per-append new-pair outputs must equal the ONE-SHOT
-    * batch pairing — so the oracle IS q174's full-Hamming-ball replay.
-    * A double-counted pair, a missed cross-day pair, or an
-    * arrival-order leak diverges rows or hashes.
+  /** One media modality of the dedup gates: the corpus derivation, the
+    * one-shot near-dup pairing over it, the append into the modality's
+    * incremental banded index (see
+    * [[graft.operators.multimodal.BandedHashIndex]]), and the oracle CTE
+    * chain that replays the pairing, ending in `${prefix}pairs(a_id,
+    * b_id, ...)`. Every media gate shape below is written once over a
+    * row; the rows differ only in these five values.
     */
-  def q185AudioIndexAppend(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q185Invocation.incrementAndGet()
-    val idxDir = s"${PipelineQueries.scratch}/q185_$inv/index"
-    val corpus = graft.operators.OpCache.cache(audioCorpus(spark, dir))
-    (0 until 3).map { day =>
-      AudioHashIndex.append(spark, idxDir,
-        corpus.filter(col("doc_id") % 3 === day), "doc_id", "blob")
-    }.reduce(_ unionByName _)
+  private[graft] final case class Modality(name: String,
+      corpus: (SparkSession, String) => DataFrame,
+      pairs: (SparkSession, DataFrame) => DataFrame,
+      append: (SparkSession, String, DataFrame) => DataFrame,
+      pairCtes: String) {
+    def prefix: String = name.take(1)
   }
 
-  /** The appended union must equal the batch pairing — q174's oracle. */
-  def q185Oracle: String = q174Oracle
-
-  private val q186Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** q186: INCREMENTAL duplicate-cluster maintenance
-    * ([[graft.operators.dedup.IncrementalClusters]] — the r19 verdict's
-    * top item: pair generation was O(delta) via the ledgers, but
-    * cluster assignment still recomputed CC over FULL pair history):
-    * the q166/q167 image corpus arrives as three crawl days through the
-    * 41i index, and each day's frozen ledger output feeds ONE state
-    * fold — rep-grain contraction, CC over the bridged reps only, a
-    * confined re-label delta. After all appends the persisted labelling
-    * must equal the ONE-SHOT transitive closure over the whole corpus —
-    * q171's oracle verbatim (recursive-CTE closure replay): a stale
-    * rep (missed re-label), a lost bridge, or a latest-wins slip in
-    * the delta resolution diverges rows or hashes.
+  /** The full Hamming ball over a replayed hash CTE — exact, because the
+    * banded retrieval is exact by pigeonhole at radius < bands.
     */
-  def q186IncrementalClusters(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q186Invocation.incrementAndGet()
-    val base = s"${PipelineQueries.scratch}/q186_$inv"
-    val corpus = graft.operators.OpCache.cache(imageCorpus(spark, dir))
-    // two-lane pipeline (Par.pipeline2): day k's state fold depends on
-    // day k's frozen ledger and fold k-1, not on append k+1 — the fold
-    // lane overlaps the next append; appends and folds each stay in
-    // day order, so state content is unchanged
-    graft.operators.Par.pipeline2(3)(day =>
-      graft.operators.multimodal.ImageHashIndex.append(spark,
-        s"$base/index", corpus.filter(col("doc_id") % 3 === day),
-        "doc_id", "blob")) { (_, ledger) =>
-      graft.operators.dedup.IncrementalClusters.append(spark,
-        s"$base/clusters", ledger, "a_id", "b_id")
-      ()
+  private def hammingPairsCte(name: String, hashes: String, hash: String,
+                              radius: Int): String =
+    s"""$name AS (
+       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
+       |  FROM $hashes a JOIN $hashes b ON b.doc_id > a.doc_id
+       |  WHERE bit_count(xor(a.$hash, b.$hash)) <= $radius
+       |)""".stripMargin
+
+  /** Images: q166 dHash → q167 banded pairs → q178's index. */
+  private[graft] val Image = Modality("image", imageCorpus,
+    (spark, c) => ImageHash.nearDupPairs(
+      ImageHash.hashes(spark, c, "doc_id", "blob"), "doc_id"),
+    (spark, idx, c) => ImageHashIndex.append(spark, idx, c, "doc_id", "blob"),
+    s"$imageHashCtes, " +
+      hammingPairsCte("ipairs", "ih", "dhash", ImageHash.DefaultMaxHamming))
+
+  /** Sound: q173 energy hash → q174 banded pairs → q185's index. */
+  private[graft] val Audio = Modality("audio", audioCorpus,
+    (spark, c) => AudioHash.nearDupPairs(
+      AudioHash.hashes(spark, c, "doc_id", "blob"), "doc_id"),
+    (spark, idx, c) => AudioHashIndex.append(spark, idx, c, "doc_id", "blob"),
+    s"$audioHashCtes, " +
+      hammingPairsCte("apairs", "ah", "ehash", AudioHash.DefaultMaxHamming))
+
+  /** Video: q175 frame hashes and share rule (8 sampled frames) → q189's
+    * index.
+    */
+  private[graft] val Video = Modality("video", videoCorpus,
+    (spark, c) => VideoHash.nearDupPairs(
+      VideoHash.frameHashes(spark, c, "doc_id", "blob", frames = 8),
+      "doc_id"),
+    (spark, idx, c) => VideoHashIndex.append(spark, idx, c, "doc_id", "blob",
+      frames = 8),
+    videoPairCtes)
+
+  private val Modalities = Seq(Image, Audio, Video)
+
+  /** Transitive closure over `pairsCte(a_id, b_id)` as a recursive CTE
+    * (the q52 discipline), ending in `${prefix}comp(node, rep)` with rep
+    * the minimum id in node's component.
+    */
+  private def closureCtes(prefix: String, pairsCte: String): String =
+    s"""${prefix}edges AS (
+       |  SELECT a_id AS src, b_id AS dst FROM $pairsCte
+       |  UNION SELECT b_id, a_id FROM $pairsCte
+       |), ${prefix}reach AS (
+       |  SELECT src AS node, dst AS r FROM ${prefix}edges
+       |  UNION
+       |  SELECT rc.node, e.dst FROM ${prefix}reach rc JOIN ${prefix}edges e ON rc.r = e.src
+       |), ${prefix}comp AS (
+       |  SELECT node, MIN(r) AS rep FROM ${prefix}reach GROUP BY node
+       |)""".stripMargin
+
+  /** A modality's pair replay followed by its closure. */
+  private def componentCtes(m: Modality): String =
+    s"${m.pairCtes}, ${closureCtes(m.prefix, s"${m.prefix}pairs")}"
+
+  /** q171 (image) / q179 (audio) / q180 (video): duplicate CLUSTERS —
+    * the multimodal×CC composition closing each media-dedup story
+    * (hashes → banded pairs → the q52 transitive-closure substrate,
+    * pre-contracted). A re-encoded BMP/PNG twin and its patched near-dup,
+    * a re-headered recording and its volume-scaled twin, identical
+    * footage: each lands in ONE cluster with the min doc_id as the
+    * deterministic keeper — what a LAION-class pipeline keeps per item.
+    * Video's 2-frame-overlap decoys stay OUTSIDE the unshifted cluster
+    * but chain to each other. The oracle replays hashes, the full pair
+    * rule and the closure as a recursive CTE.
+    */
+  def mediaClusters(m: Modality): (SparkSession, String) => DataFrame =
+    (spark, dir) => {
+      // cached: components() consumes its pair input three times (node
+      // universe both ways + the pre-contraction pass) and the pair
+      // lineage is the whole decode→hash→band join
+      val pairs = OpCache.cache(m.pairs(spark, m.corpus(spark, dir)))
+      DupClusters.components(pairs, "a_id", "b_id")
+        .select(col("node").as("doc_id"), col("cluster_rep"),
+          col("cluster_size"))
     }
-    graft.operators.dedup.IncrementalClusters.clusters(spark, s"$base/clusters")
-      .select(col("node").as("doc_id"), col("cluster_rep"),
-        col("cluster_size"))
-  }
 
-  /** N ledger folds must equal the one-shot closure — q171's oracle. */
-  def q186Oracle: String = q171Oracle
+  def mediaClustersOracle(m: Modality): String =
+    s"""WITH RECURSIVE ${componentCtes(m)}
+       |SELECT c.node AS doc_id, c.rep AS cluster_rep, cnt.cluster_size
+       |FROM ${m.prefix}comp c
+       |JOIN (SELECT rep, COUNT(*) AS cluster_size
+       |      FROM ${m.prefix}comp GROUP BY 1) cnt USING (rep)""".stripMargin
 
-  private val q188Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** q188: audio INCREMENTAL clusters — the full production composition
-    * for a second modality (q186 proved it for images): the q185 audio
-    * index's per-append frozen ledgers fold one by one into the
-    * persisted [[graft.operators.dedup.IncrementalClusters]] state, and
-    * the final labelling must equal q179's one-shot recursive-CTE
-    * closure — pair generation AND cluster maintenance both O(delta)
-    * for sound, nothing rescanning history.
+  /** q178 (image) / q185 (audio) / q189 (video): INCREMENTAL media-hash
+    * index — the daily-append discipline of the generic banded index.
+    * The corpus arrives as three [[crawlDay]]s, each appended to a fresh
+    * on-disk index; the union of the per-append new-pair outputs must
+    * equal the ONE-SHOT batch pairing, so the oracle IS the modality's
+    * pair gate (q167/q174/q175). Video appends index each day's distinct
+    * (video, frame-hash) postings and return the COMPLETE (a_id, b_id,
+    * n_shared) of the video pairs new that day (videos arrive
+    * atomically). A double-counted pair (re-pairing a stored bucket), a
+    * missed cross-day pair (delta not probed against the store), a
+    * same-video self-pair, or an arrival-order leak (pairs ordered by
+    * arrival instead of id) diverges rows or hashes.
     */
-  def q188AudioIncrClusters(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q188Invocation.incrementAndGet()
-    val base = s"${PipelineQueries.scratch}/q188_$inv"
-    val corpus = graft.operators.OpCache.cache(audioCorpus(spark, dir))
-    // fold lane overlaps the next append (Par.pipeline2, q186's shape)
-    graft.operators.Par.pipeline2(3)(day =>
-      AudioHashIndex.append(spark, s"$base/index",
-        corpus.filter(col("doc_id") % 3 === day), "doc_id", "blob")) {
-      (_, ledger) =>
-        graft.operators.dedup.IncrementalClusters.append(spark,
-          s"$base/clusters", ledger, "a_id", "b_id")
+  def mediaIndex(gate: String, m: Modality): (SparkSession, String) => DataFrame =
+    (spark, dir) => {
+      val idxDir = s"${PipelineQueries.freshDir(gate)}/index"
+      val corpus = OpCache.cache(m.corpus(spark, dir))
+      (0 until 3).map(day => m.append(spark, idxDir, crawlDay(corpus, day)))
+        .reduce(_ unionByName _)
+    }
+
+  /** The three crawl days of `corpus` through m's index at `indexDir`,
+    * each day's new pairs folded into the cluster state at `stateDir`
+    * ([[IncrementalClusters]]: rep-grain contraction, CC over the
+    * bridged reps only, a confined re-label delta). Two-lane pipeline
+    * ([[Par.pipeline2]]): day k's fold depends on day k's frozen ledger
+    * and fold k-1, not on append k+1, so the fold lane overlaps the next
+    * append; appends and folds each stay in day order.
+    */
+  private def foldDays(spark: SparkSession, m: Modality, corpus: DataFrame,
+                       indexDir: String, stateDir: String): Unit =
+    Par.pipeline2(3)(day => m.append(spark, indexDir, crawlDay(corpus, day))) {
+      (_, pairs) =>
+        IncrementalClusters.append(spark, stateDir, pairs, "a_id", "b_id")
         ()
     }
-    graft.operators.dedup.IncrementalClusters.clusters(spark, s"$base/clusters")
-      .select(col("node").as("doc_id"), col("cluster_rep"),
-        col("cluster_size"))
-  }
 
-  /** N ledger folds must equal the one-shot closure — q179's oracle. */
-  def q188Oracle: String = q179Oracle
-
-  private val q189Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** q189: INCREMENTAL video frame-hash index
-    * ([[graft.operators.multimodal.VideoHashIndex]] — the last modality
-    * onto the generic banded-index protocol; before this, every video
-    * append re-paired history): the q175 video corpus arrives as three
-    * interleaved crawl days (dup groups and their shifted members split
-    * ACROSS days); each append indexes the day's distinct
-    * (video, frame-hash) postings keyed by min frame key and returns
-    * the COMPLETE (a_id, b_id, n_shared) for exactly the video pairs
-    * new that day (videos arrive atomically, so a pair's every frame
-    * match lands in the later member's batch). The union must equal
-    * q175's one-shot banded share-rule replay — a ledger row lost to
-    * multi-band double-count, a same-video self-pair leaking through,
-    * or a cross-day frame match missed against the store all diverge.
+  /** q186 (image) / q188 (audio) / q190 (video): INCREMENTAL duplicate
+    * clusters — pair generation is O(delta) through the index ledgers,
+    * and cluster assignment is too ([[foldDays]]), nothing rescanning
+    * history. After all appends the persisted labelling must equal the
+    * ONE-SHOT closure over the whole corpus — the modality's cluster
+    * oracle verbatim: a stale rep (missed re-label), a lost bridge, or a
+    * latest-wins slip in the delta resolution diverges rows or hashes.
     */
-  def q189VideoIndexAppend(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.multimodal.VideoHashIndex
-    val inv = q189Invocation.incrementAndGet()
-    val idxDir = s"${PipelineQueries.scratch}/q189_$inv/index"
-    val corpus = graft.operators.OpCache.cache(videoCorpus(spark, dir))
-    (0 until 3).map { day =>
-      VideoHashIndex.append(spark, idxDir,
-        corpus.filter(col("doc_id") % 3 === day), "doc_id", "blob",
-        frames = 8)
-    }.reduce(_ unionByName _)
-  }
-
-  /** The appended union must equal the batch share rule — q175's oracle. */
-  def q189Oracle: String = q175Oracle
-
-  private val q190Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** q190: video INCREMENTAL clusters — q186/q188's composition for the
-    * third modality: each day's complete new video pairs (q189's
-    * per-append output) fold into the persisted cluster state; the
-    * final labelling must equal q180's one-shot closure. With this the
-    * whole media-dedup story is incremental end to end for every
-    * modality: pair ledgers → cluster state, no history rescan
-    * anywhere.
-    */
-  def q190VideoIncrClusters(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.multimodal.VideoHashIndex
-    val inv = q190Invocation.incrementAndGet()
-    val base = s"${PipelineQueries.scratch}/q190_$inv"
-    val corpus = graft.operators.OpCache.cache(videoCorpus(spark, dir))
-    // fold lane overlaps the next append (Par.pipeline2, q186's shape)
-    graft.operators.Par.pipeline2(3)(day =>
-      VideoHashIndex.append(spark, s"$base/index",
-        corpus.filter(col("doc_id") % 3 === day), "doc_id", "blob",
-        frames = 8)) { (_, dayPairs) =>
-      graft.operators.dedup.IncrementalClusters.append(spark,
-        s"$base/clusters", dayPairs, "a_id", "b_id")
-      ()
+  def mediaIncrClusters(gate: String,
+                        m: Modality): (SparkSession, String) => DataFrame =
+    (spark, dir) => {
+      val base = PipelineQueries.freshDir(gate)
+      val corpus = OpCache.cache(m.corpus(spark, dir))
+      foldDays(spark, m, corpus, s"$base/index", s"$base/clusters")
+      IncrementalClusters.clusters(spark, s"$base/clusters")
+        .select(col("node").as("doc_id"), col("cluster_rep"),
+          col("cluster_size"))
     }
-    graft.operators.dedup.IncrementalClusters.clusters(spark, s"$base/clusters")
-      .select(col("node").as("doc_id"), col("cluster_rep"),
-        col("cluster_size"))
+
+  /** One modality's row of the dedup report: items in the corpus, items
+    * in the near-dup graph (`labels`, one row per linked node with its
+    * rep in `repCol`), the clusters they collapse to, and the redundancy.
+    */
+  private def reportRow(m: Modality, corpus: DataFrame, labels: DataFrame,
+                        repCol: String): DataFrame = {
+    val stats = labels.agg(
+      count(lit(1)).as("n_linked"),
+      count_distinct(col(repCol)).as("n_clusters"))
+    corpus.agg(count(lit(1)).as("n_items")).crossJoin(stats)
+      .select(lit(m.name).as("modality"), col("n_items"),
+        col("n_linked"), col("n_clusters"),
+        (col("n_linked") - col("n_clusters")).as("n_redundant"))
   }
 
-  /** N pair-delta folds must equal the one-shot closure — q180's oracle. */
-  def q190Oracle: String = q180Oracle
+  /** q184: the MULTIMODAL DEDUP REPORT — the dim-sized audit table a
+    * production curation run publishes beside its keep lists (the
+    * FineWeb-ablation shape at media grain): per modality, how many
+    * items exist, how many sit in the near-dup graph, how many clusters
+    * they collapse to, and how much is redundant. The oracle replays
+    * ALL THREE closures end-to-end and all three rollups — so this gate
+    * re-checks the entire image, audio and video dedup stacks through
+    * an independent aggregate lens.
+    */
+  def q184MultimodalDedupReport(spark: SparkSession, dir: String): DataFrame =
+    // the three modality pipelines are fully independent (separate
+    // corpora, separate closures) and their CC loops are EAGER — overlap
+    // them (§2.6) instead of serializing three iterative loops
+    Par.run(Modalities.map { m => () =>
+      val corpus = m.corpus(spark, dir)
+      // componentLabels, not components: the report aggregates only the
+      // node count and distinct reps, so the size rollup + join behind
+      // components() is dead weight here (guide §2.4; same argument as
+      // q191's labelling() accessor)
+      val labels = DupClusters.componentLabels(
+        OpCache.cache(m.pairs(spark, corpus)), "a_id", "b_id")
+      reportRow(m, corpus, labels, "cluster_rep")
+    }).reduce(_ unionByName _)
 
-  private val q191Invocation = new java.util.concurrent.atomic.AtomicInteger(0)
+  def q184Oracle: String = {
+    val rows = Modalities.map { m =>
+      val comp = s"${m.prefix}comp"
+      s"""SELECT '${m.name}' AS modality, n.n_items,
+         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM $comp) AS n_linked,
+         |  (SELECT CAST(COUNT(DISTINCT rep) AS BIGINT) FROM $comp) AS n_clusters,
+         |  (SELECT CAST(COUNT(*) AS BIGINT) FROM $comp)
+         |    - (SELECT CAST(COUNT(DISTINCT rep) AS BIGINT) FROM $comp) AS n_redundant
+         |FROM n""".stripMargin
+    }
+    s"""WITH RECURSIVE ${Modalities.map(componentCtes).mkString(", ")},
+       |n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_items FROM documents)
+       |${rows.mkString("\nUNION ALL\n")}""".stripMargin
+  }
 
   /** q191: the multimodal dedup report FROM INCREMENTAL STATE — q184's
-    * three-row audit table rebuilt without recomputing a single
-    * closure: all three modality corpora arrive as three crawl days,
-    * each day flowing index-append → cluster-state fold, and the report
-    * reads ONLY the maintained labellings (plus the corpus counts). The
-    * oracle is q184's one-shot replay of all three closures — so this
-    * gate proves the continuously-maintained state answers the audit
-    * query a batch pipeline would recompute from scratch.
+    * table rebuilt without recomputing a single closure: every modality
+    * corpus flows through [[foldDays]], and the report reads ONLY the
+    * maintained labellings (plus the corpus counts). The oracle is
+    * q184's one-shot replay of all three closures — so this gate proves
+    * the continuously-maintained state answers the audit query a batch
+    * pipeline would recompute from scratch.
     */
   def q191IncrementalReport(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.dedup.IncrementalClusters
-    import graft.operators.multimodal.VideoHashIndex
-    val inv = q191Invocation.incrementAndGet()
-    val base = s"${PipelineQueries.scratch}/q191_$inv"
-    def row(modality: String, corpus: DataFrame,
-            dayPairs: Int => DataFrame): DataFrame = {
-      // fold lane overlaps the next append inside each modality branch
-      // (Par.pipeline2, q186's shape; the branches themselves overlap
-      // through Par.run below)
-      graft.operators.Par.pipeline2(3)(dayPairs) { (_, pairs) =>
-        IncrementalClusters.append(spark, s"$base/$modality",
-          pairs, "a_id", "b_id")
-        ()
-      }
+    val base = PipelineQueries.freshDir("q191")
+    // three independent index+state pipelines (separate dirs, separate
+    // corpora); days stay sequential INSIDE each branch (state folds),
+    // the branches overlap (§2.6)
+    Par.run(Modalities.map { m => () =>
+      val corpus = OpCache.cache(m.corpus(spark, dir))
+      foldDays(spark, m, corpus, s"$base/${m.name}_idx", s"$base/${m.name}")
       // labelling(), not clusters(): the report needs only the node count
       // and the distinct-rep count, so the size rollup + row-preserving
       // join (and the checkpoint job that feeds its two branches) are
       // dead weight here — one pass over the resolved state instead
       // (equality with the clusters()-based aggregate is 1:1 by the
       // labelling() contract, and q191's oracle re-proves it end-to-end)
-      val st = IncrementalClusters.labelling(spark, s"$base/$modality")
-      val stats = st.agg(
-        count(lit(1)).as("n_linked"),
-        count_distinct(col("rep")).as("n_clusters"))
-      corpus.agg(count(lit(1)).as("n_items")).crossJoin(stats)
-        .select(lit(modality).as("modality"), col("n_items"),
-          col("n_linked"), col("n_clusters"),
-          (col("n_linked") - col("n_clusters")).as("n_redundant"))
-    }
-    val img = graft.operators.OpCache.cache(imageCorpus(spark, dir))
-    val aud = graft.operators.OpCache.cache(audioCorpus(spark, dir))
-    val vid = graft.operators.OpCache.cache(videoCorpus(spark, dir))
-    // three independent index+state pipelines (separate dirs, separate
-    // corpora); days stay sequential INSIDE each branch (state folds),
-    // the branches overlap (§2.6) — same appends, same folds, same report
-    graft.operators.Par.run(Seq(
-      () => row("image", img, day => graft.operators.multimodal.ImageHashIndex
-        .append(spark, s"$base/image_idx",
-          img.filter(col("doc_id") % 3 === day), "doc_id", "blob")),
-      () => row("audio", aud, day => AudioHashIndex
-        .append(spark, s"$base/audio_idx",
-          aud.filter(col("doc_id") % 3 === day), "doc_id", "blob")),
-      () => row("video", vid, day => VideoHashIndex
-        .append(spark, s"$base/video_idx",
-          vid.filter(col("doc_id") % 3 === day), "doc_id", "blob",
-          frames = 8)))).reduce(_ unionByName _)
+      reportRow(m, corpus,
+        IncrementalClusters.labelling(spark, s"$base/${m.name}"), "rep")
+    }).reduce(_ unionByName _)
   }
-
-  /** Maintained state must answer the one-shot audit — q184's oracle. */
-  def q191Oracle: String = q184Oracle
-
-  /** q184: the MULTIMODAL DEDUP REPORT — the dim-sized audit table a
-    * production curation run publishes beside its keep lists (the
-    * FineWeb-ablation shape at media grain): per modality, how many
-    * items exist, how many sit in the near-dup graph, how many clusters
-    * they collapse to, and how much is redundant. Composes the
-    * 41e/41j/41k cluster machinery (image, audio AND video over their
-    * gate corpora — video through the round-20 Hamming-tolerant banded
-    * frame rule) into three rollup rows; the oracle replays ALL THREE
-    * closures end-to-end and all three rollups — so this gate re-checks
-    * the entire image, audio and video dedup stacks through an
-    * independent aggregate lens.
-    */
-  def q184MultimodalDedupReport(spark: SparkSession, dir: String): DataFrame = {
-    import graft.operators.OpCache
-    import graft.operators.dedup.DupClusters
-    def row(modality: String, corpus: DataFrame,
-            pairs: DataFrame): DataFrame = {
-      // componentLabels, not components: the report aggregates only the
-      // node count and distinct reps, so the size rollup + join behind
-      // components() is dead weight here (guide §2.4; same argument as
-      // q191's labelling() accessor)
-      val comps = DupClusters.componentLabels(OpCache.cache(pairs),
-        "a_id", "b_id")
-      val stats = comps.agg(
-        count(lit(1)).as("n_linked"),
-        count_distinct(col("cluster_rep")).as("n_clusters"))
-      corpus.agg(count(lit(1)).as("n_items")).crossJoin(stats)
-        .select(lit(modality).as("modality"), col("n_items"),
-          col("n_linked"), col("n_clusters"),
-          (col("n_linked") - col("n_clusters")).as("n_redundant"))
-    }
-    val img = imageCorpus(spark, dir)
-    val aud = audioCorpus(spark, dir)
-    val vid = videoCorpus(spark, dir)
-    // the three modality pipelines are fully independent (separate
-    // corpora, separate closures) and their CC loops are EAGER — overlap
-    // them (§2.6) instead of serializing three iterative drivers; each
-    // branch's plan, and the report, are unchanged
-    graft.operators.Par.run(Seq(
-      () => row("image", img,
-        ImageHash.nearDupPairs(
-          ImageHash.hashes(spark, img, "doc_id", "blob"), "doc_id")),
-      () => row("audio", aud,
-        AudioHash.nearDupPairs(
-          AudioHash.hashes(spark, aud, "doc_id", "blob"), "doc_id")),
-      () => row("video", vid,
-        VideoHash.nearDupPairs(
-          VideoHash.frameHashes(spark, vid, "doc_id", "blob", frames = 8),
-          "doc_id")))).reduce(_ unionByName _)
-  }
-
-  def q184Oracle: String =
-    s"""WITH RECURSIVE $imageHashCtes, ipairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM ih a JOIN ih b ON b.doc_id > a.doc_id
-       |  WHERE bit_count(xor(a.dhash, b.dhash)) <= ${ImageHash.DefaultMaxHamming}
-       |), iedges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM ipairs
-       |  UNION SELECT b_id, a_id FROM ipairs
-       |), ireach AS (
-       |  SELECT src AS node, dst AS r FROM iedges
-       |  UNION
-       |  SELECT rc.node, e.dst FROM ireach rc JOIN iedges e ON rc.r = e.src
-       |), icomp AS (
-       |  SELECT node, MIN(r) AS rep FROM ireach GROUP BY node
-       |), $audioHashCtes, apairs AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id
-       |  FROM ah a JOIN ah b ON b.doc_id > a.doc_id
-       |  WHERE bit_count(xor(a.ehash, b.ehash)) <= ${AudioHash.DefaultMaxHamming}
-       |), aedges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM apairs
-       |  UNION SELECT b_id, a_id FROM apairs
-       |), areach AS (
-       |  SELECT src AS node, dst AS r FROM aedges
-       |  UNION
-       |  SELECT rc.node, e.dst FROM areach rc JOIN aedges e ON rc.r = e.src
-       |), acomp AS (
-       |  SELECT node, MIN(r) AS rep FROM areach GROUP BY node
-       |), $videoPairCtes, vedges AS (
-       |  SELECT a_id AS src, b_id AS dst FROM vpairs
-       |  UNION SELECT b_id, a_id FROM vpairs
-       |), vreach AS (
-       |  SELECT src AS node, dst AS r FROM vedges
-       |  UNION
-       |  SELECT rc.node, e.dst FROM vreach rc JOIN vedges e ON rc.r = e.src
-       |), vcomp AS (
-       |  SELECT node, MIN(r) AS rep FROM vreach GROUP BY node
-       |), n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_items FROM documents)
-       |SELECT 'image' AS modality, n.n_items,
-       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM icomp) AS n_linked,
-       |  (SELECT CAST(COUNT(DISTINCT rep) AS BIGINT) FROM icomp) AS n_clusters,
-       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM icomp)
-       |    - (SELECT CAST(COUNT(DISTINCT rep) AS BIGINT) FROM icomp) AS n_redundant
-       |FROM n
-       |UNION ALL
-       |SELECT 'audio', n.n_items,
-       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM acomp),
-       |  (SELECT CAST(COUNT(DISTINCT rep) AS BIGINT) FROM acomp),
-       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM acomp)
-       |    - (SELECT CAST(COUNT(DISTINCT rep) AS BIGINT) FROM acomp)
-       |FROM n
-       |UNION ALL
-       |SELECT 'video', n.n_items,
-       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM vcomp),
-       |  (SELECT CAST(COUNT(DISTINCT rep) AS BIGINT) FROM vcomp),
-       |  (SELECT CAST(COUNT(*) AS BIGINT) FROM vcomp)
-       |    - (SELECT CAST(COUNT(DISTINCT rep) AS BIGINT) FROM vcomp)
-       |FROM n""".stripMargin
 
   def q96Oracle: String =
     """WITH p AS (

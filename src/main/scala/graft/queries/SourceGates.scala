@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
@@ -21,8 +19,6 @@ object SourceGates {
 
   private val Date = "2024-03-15"
 
-  private val q115Invocation = new AtomicInteger(0)
-
   /** q115: corrupt-record QUARANTINE (49b,
     * [[RawZone.readWithQuarantine]]) — crawler-shaped JSONL with every
     * ~101st line broken reads through the permissive reader; corrupt
@@ -33,8 +29,7 @@ object SourceGates {
     * invented one, or a mis-routed corrupt line all hash-fail.
     */
   def q115Quarantine(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q115Invocation.incrementAndGet()
-    val base = s"${PipelineQueries.scratch}/q115_$inv"
+    val base = PipelineQueries.freshDir("q115")
     val pk = col("p_partkey")
     def s(c: org.apache.spark.sql.Column) = c.cast("string")
     val line = when(pk % 101 === 0, lit("{broken"))
@@ -66,8 +61,6 @@ object SourceGates {
       |FROM part WHERE p_partkey % 101 <> 0
       |GROUP BY 1""".stripMargin
 
-  private val q116Invocation = new AtomicInteger(0)
-
   /** q116: SCHEMA-DRIFT read (49c, [[CleanZone.readMerged]]) — day 1's
     * files lack the `discount` column day 2's carry (crawler payloads
     * gain fields over time); `mergeSchema` unions the footers and the
@@ -76,8 +69,7 @@ object SourceGates {
     * discounts or drop the column.
     */
   def q116SchemaDrift(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q116Invocation.incrementAndGet()
-    val base = s"${PipelineQueries.scratch}/q116_$inv/t"
+    val base = s"${PipelineQueries.freshDir("q116")}/t"
     val pk = col("p_partkey")
     val p = Tables.part(spark, dir)
     p.select(pk.as("id"), (pk % 800 + 150).cast("long").as("price"))
@@ -98,8 +90,6 @@ object SourceGates {
       |FROM part, (VALUES (1), (2)) t(d)
       |GROUP BY d""".stripMargin
 
-  private val q117Invocation = new AtomicInteger(0)
-
   /** q117: ORC format round-trip (49d) — the partitioned write goes
     * through [[CleanZone.writePartitioned]]'s dynamic-overwrite path with
     * format="orc" and reads back via [[CleanZone.readFormat]]; the oracle
@@ -108,8 +98,7 @@ object SourceGates {
     * point: the FORMAT must not change the data).
     */
   def q117OrcRoundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q117Invocation.incrementAndGet()
-    val base = s"${PipelineQueries.scratch}/q117_$inv/orc_table"
+    val base = s"${PipelineQueries.freshDir("q117")}/orc_table"
     val pk = col("p_partkey")
     val df = Tables.part(spark, dir).select(pk.as("id"),
       (pk % 10).cast("int").as("bucket"),
@@ -125,8 +114,6 @@ object SourceGates {
       |  CAST(SUM(p_partkey % 800 + 150) AS BIGINT) AS total_price
       |FROM part GROUP BY 1""".stripMargin
 
-  private val q118Invocation = new AtomicInteger(0)
-
   /** q118: SMALL-FILES COMPACTION (49e, [[Compaction.compactDir]]) — 16
     * deliberately tiny files compact through the staged retire-then-swap
     * rewrite; the require pins that a real rewrite happened (fewer files
@@ -134,8 +121,7 @@ object SourceGates {
     * PRESERVATION, the property compaction must never break.
     */
   def q118Compaction(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q118Invocation.incrementAndGet()
-    val base = s"${PipelineQueries.scratch}/q118_$inv/day"
+    val base = s"${PipelineQueries.freshDir("q118")}/day"
     val pk = col("p_partkey")
     Tables.part(spark, dir).select(pk.as("id"),
         (pk % 7).cast("int").as("grp"),
@@ -155,8 +141,6 @@ object SourceGates {
       |  CAST(SUM(p_partkey % 800 + 150) AS BIGINT) AS total_price
       |FROM part GROUP BY 1""".stripMargin
 
-  private val q119Invocation = new AtomicInteger(0)
-
   /** q119: CONCURRENT isolated partition-overwrite (19,
     * [[CleanZone.writePartitionedIsolated]] — the reference's BigQuery
     * `table$day` atomicity): two writers land DIFFERENT days of the same
@@ -168,8 +152,7 @@ object SourceGates {
     * oracle's replay of both days.
     */
   def q119ConcurrentWrite(spark: SparkSession, dir: String): DataFrame = {
-    val inv = q119Invocation.incrementAndGet()
-    val table = s"${PipelineQueries.scratch}/q119_$inv/fact"
+    val table = s"${PipelineQueries.freshDir("q119")}/fact"
     val pk = col("p_partkey")
     def dayDf(d: Int) = Tables.part(spark, dir).select(pk.as("id"),
       lit(d).as("day"), (pk % 800 + 150 + d).cast("long").as("price"))

@@ -7,19 +7,6 @@ import org.apache.spark.sql.functions._
   */
 object StreamOps {
 
-  /** Continuous exact dedup: drops re-deliveries of the same key seen
-    * within the watermark horizon (state is bounded by the horizon — the
-    * streaming twin of the reference's batch drop_duplicates). The event
-    * time column must be part of the frame for the watermark to bound
-    * state. Empty `keys` dedups on all columns.
-    */
-  def dedupWithinWatermark(events: DataFrame, keys: Seq[String],
-                           tsCol: String, watermark: String): DataFrame = {
-    val wm = events.withWatermark(tsCol, watermark)
-    if (keys.isEmpty) wm.dropDuplicatesWithinWatermark()
-    else wm.dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-  }
-
   /** CONTINUOUS sketch maintenance: the streaming twin of the batch
     * sketches — each micro-batch folds into the same fixed-size state the
     * batch operators produce, so a stream consumer holds an always-current

@@ -94,7 +94,7 @@ class ImageHashSpec extends SparkSpec {
 
   test("verify-at-join, then a narrow dedup: the load-bearing plan order") {
     // Both orders of getting this wrong were measured at 100×
-    // (ProbeQ167): the popcount cut must execute AT the band join —
+    // (500k images): the popcount cut must execute AT the band join —
     // BELOW the multi-band dedup aggregate — and the aggregate itself
     // must group on ids with only the 4-byte precomputed ham columns,
     // never the four 8-byte hash columns.

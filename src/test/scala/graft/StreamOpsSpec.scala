@@ -14,24 +14,6 @@ class StreamOpsSpec extends SparkSpec {
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
 
-  test("dropDuplicatesWithinWatermark suppresses re-delivered events") {
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, Timestamp, Double)]
-    val deduped = StreamOps.dedupWithinWatermark(
-      stream.toDF().toDF("event_id", "ts", "value"),
-      keys = Seq("event_id"), tsCol = "ts", watermark = "10 minutes")
-    val q = deduped.writeStream.format("memory").queryName("dedup_stream")
-      .outputMode(OutputMode.Append).start()
-    try {
-      stream.addData((1L, ts(0), 5.0), (1L, ts(1), 5.0), (2L, ts(2), 7.0))
-      q.processAllAvailable()
-      stream.addData((1L, ts(3), 5.0)) // re-delivery within horizon
-      q.processAllAvailable()
-      val ids = spark.table("dedup_stream").collect().map(_.getLong(0)).toSeq
-      assert(ids.sorted == Seq(1L, 2L), s"got $ids")
-    } finally q.stop()
-  }
-
   test("stream-stream interval join enriches events with the in-window rate") {
     implicit val sqlCtx = spark.sqlContext
     val evs = MemoryStream[(Long, Timestamp, String)]
